@@ -67,12 +67,12 @@ def _quality_filter(docs: DataFrame) -> DataFrame:
 #: recursive-CTE oracle and leave >1 survivor per component).
 MAX_CC_ITERS = 20
 
-#: Label rows per shuffle partition inside the CC loop — the loop
-#: re-partitions every round on node-sized frames, so its partition
-#: count must track graph volume, not the session's batch default
-#: (see _connected_components_loop). ~4M rows ≈ 64 MB at 16 B/row,
-#: inside the guide's 100 MB-1 GB per-partition band.
-CC_LABEL_ROWS_PER_PARTITION = 4_000_000
+#: Edge rows per shuffle partition inside the CC loop — the loop
+#: re-partitions every round on node- and edge-sized frames, so its
+#: partition count must track graph volume, not the session's batch
+#: default (see _connected_components_loop). ~4M rows ≈ 64 MB at
+#: 16 B/row, inside the guide's 100 MB-1 GB per-partition band.
+CC_ROWS_PER_PARTITION = 4_000_000
 
 #: Reentrancy bookkeeping for connected_components' scoped conf
 #: overrides (constraint-propagation disable AND the loop's
@@ -148,35 +148,31 @@ def connected_components(pairs: DataFrame) -> DataFrame:
 
 
 def _connected_components_loop(pairs: DataFrame) -> DataFrame:
-    sess = pairs.sparkSession
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("lbl"))
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    edges = (
+        pairs.selectExpr("doc_a AS src", "doc_b AS dst")
+        .unionByName(pairs.selectExpr("doc_b AS src", "doc_a AS dst"))
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
         .localCheckpoint(eager=True)
     )
-    # Size the loop's shuffle partitions to LABEL VOLUME, not the
-    # session's batch default (the same volume-not-core-count rule the
-    # bench applies to streaming state partitions): every per-round
-    # exchange here carries at most node-sized frames, so the
-    # batch-tuned partition count just multiplies per-round scheduler
-    # and commit overhead across O(log diameter) rounds. The count is
-    # derived from the materialized label frame, so it scales with the
-    # graph (1 partition per CC_LABEL_ROWS_PER_PARTITION labels —
-    # thousands of partitions for a billion-node graph, one for the
-    # test corpora). Same-window A/B on the sf 0.1 winnowing match
-    # graph (1086 nodes, 12 rounds): 32 partitions 5.5-7.7 s, sized
-    # 4.1-4.7 s, identical labels. The pre-entry value is captured and
-    # restored by connected_components' depth-guarded scope (only the
-    # outermost of overlapping calls restores — ADVICE r15), so this
-    # set is scratch inside that scope, never the value restored.
-    n_nodes = labels.count()
-    loop_parts = max(1, -(-n_nodes // CC_LABEL_ROWS_PER_PARTITION))
-    sess.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+    # Size the loop's shuffle partitions to GRAPH VOLUME, not the
+    # session's batch default: every per-round exchange carries at most
+    # edge-sized frames, so the batch-tuned partition count just
+    # multiplies per-round scheduler and commit overhead across
+    # O(log diameter) rounds. The edge count rides the checkpoint job
+    # as an observe() metric, so sizing costs no action (1 partition
+    # per CC_ROWS_PER_PARTITION edge rows: one for the test corpora,
+    # thousands for a billion-edge graph). Same-window A/B on the sf 0.1
+    # winnowing match graph (1086 nodes, 12 rounds, 32-core host): 32
+    # partitions 5.5-7.7 s, sized 4.1-4.7 s, identical labels. This set
+    # is scratch inside connected_components' depth-guarded conf scope,
+    # which restores the pre-entry value.
+    loop_parts = max(1, -(-obs.get["rows"] // CC_ROWS_PER_PARTITION))
+    pairs.sparkSession.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+    # identity labels stay a PLAN, evaluated inside the first fused action
+    labels = edges.selectExpr("src AS id").distinct().selectExpr("id", "id AS lbl")
     return _cc_iterate(edges, labels)
 
 
@@ -211,15 +207,12 @@ def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
 #: Rounds composed into ONE plan per driver action. The loop's frames
 #: are node-sized, so its wall-clock is per-ACTION fixed overhead
 #: (localCheckpoint job + obs round trip + AQE stage scheduling,
-#: ~0.3-0.4 s each on this box) times the action count, and composing
-#: two rounds per materialization halves the actions for at most one
-#: wasted no-op round after the fixpoint (labels are monotone
-#: non-increasing, so "no change across the pair" == "fixpoint at the
-#: pair's start"; a no-op round is the identity, so final labels are
-#: bit-identical). 2, not more: each composed round multiplies plan
-#: depth (the pointer-double references its propagation subtree twice,
-#: so re-evaluation inside one plan grows geometrically; ReuseExchange
-#: dedups the exchanges but not the aggregates above them).
+#: ~0.5-0.8 s each on a 4-core host) times the action count, and
+#: composing two rounds per materialization halves the actions. 2, not
+#: more: each composed round multiplies plan depth (the pointer-double
+#: references its propagation subtree twice, so re-evaluation inside
+#: one plan grows geometrically; ReuseExchange dedups the exchanges
+#: but not the aggregates above them).
 CC_ROUNDS_PER_ACTION = 2
 
 
@@ -230,36 +223,28 @@ def _cc_iterate(edges: DataFrame, labels: DataFrame) -> DataFrame:
     # propagation aggregates, the pointer-doubling self-joins, and the
     # convergence probe all materialize in the same localCheckpoint
     # job, with the changed-count riding the plan as an observe()
-    # metric instead of a second pass.
-    n_actions = -(-MAX_CC_ITERS // CC_ROUNDS_PER_ACTION)
-    for _ in range(n_actions):
-        stepped = labels
-        for _ in range(CC_ROUNDS_PER_ACTION):
-            stepped = _cc_round(edges, stepped)
+    # metric. The probe compares the action's LAST round with the round
+    # before it (both in the plan): a round that changes nothing IS the
+    # fixpoint, so a graph converging inside an action stops on that
+    # action, and the budget is exactly MAX_CC_ITERS rounds. Labels only
+    # ever decrease, so "no decrease" means "unchanged".
+    for done in range(0, MAX_CC_ITERS, CC_ROUNDS_PER_ACTION):
+        for _ in range(min(CC_ROUNDS_PER_ACTION, MAX_CC_ITERS - done) - 1):
+            labels = _cc_round(edges, labels)
         obs = Observation()
-        new = (
-            stepped.join(labels.withColumnRenamed("lbl", "prev"), "id")
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("lbl") < F.col("prev")).cast("long")
-                ).alias("changed"),
-            )
+        labels = (
+            _cc_round(edges, labels)
+            .join(labels.withColumnRenamed("lbl", "prev"), "id")
+            .observe(obs, F.count_if(F.col("lbl") < F.col("prev")).alias("changed"))
             .select("id", "lbl")
             .localCheckpoint(eager=True)
         )
-        labels = new
-        # changed counts label DECREASES vs the pair's start; labels
-        # only ever decrease, so 0 across the pair means the first
-        # composed round was already a fixpoint
-        if (obs.get["changed"] or 0) == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components: no fixed point in {MAX_CC_ITERS} rounds "
-            "(pair graph diameter > 2^20 — check the input for pathology)"
-        )
-    return labels.select(F.col("id").alias("doc_id"), F.col("lbl").alias("component"))
+        if not obs.get["changed"]:
+            return labels.selectExpr("id AS doc_id", "lbl AS component")
+    raise RuntimeError(
+        f"connected_components: no fixed point in {MAX_CC_ITERS} rounds "
+        "(pair graph diameter > 2^20 — check the input for pathology)"
+    )
 
 
 def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,8 +285,8 @@ def near_dup_drop_list(pairs: DataFrame) -> DataFrame:
     signatures. Each iteration is one join + one groupBy of that tiny
     frame, eagerly checkpointed so the plan doesn't deepen and the
     upstream LSH subtree is computed exactly once. The convergence
-    probe is a count() on label changes — an action over ids, not a
-    collect of data."""
+    probe is an observe() metric on label changes inside the
+    checkpoint job — no extra action, no collect of data."""
     comp = connected_components(pairs)
     return comp.filter(F.col("component") != F.col("doc_id")).select("doc_id")
 

@@ -187,12 +187,15 @@ def local_frame(
         f.nullable and not o.nullable
         for f, o in zip(fields, out.schema.fields)
     ):
+        # backtick-quoted, so a dotted field name is one column, not
+        # struct access
+        cols = [F.col("`" + f.name.replace("`", "``") + "`") for f in fields]
         out = out.select(
             *[
-                F.when(F.col(f.name).isNotNull(), F.col(f.name)).alias(f.name)
+                F.when(c.isNotNull(), c).alias(f.name)
                 if f.nullable and not o.nullable
-                else F.col(f.name)
-                for f, o in zip(fields, out.schema.fields)
+                else c
+                for c, f, o in zip(cols, fields, out.schema.fields)
             ]
         )
     return out

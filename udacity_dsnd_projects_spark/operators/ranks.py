@@ -96,7 +96,9 @@ def checkpoint_with_sketch(
     ck = df.observe(
         obs,
         *[
-            F.expr(f"approx_percentile({c}, array({probs}), {acc})").alias(c)
+            F.expr(
+                f"approx_percentile(`{c.replace('`', '``')}`, array({probs}), {acc})"
+            ).alias(c)
             for c in order_cols
         ],
     ).localCheckpoint(eager=True)
@@ -338,9 +340,13 @@ def exact_multi_rank(
     from pyspark.ml.feature import Bucketizer
 
     order_cols = [c for c, _, _ in specs]
-    if bounds is not None and all(c in bounds for c in order_cols):
+    if bounds is not None:
         # precomputed (e.g. checkpoint_with_sketch) — skip the sketch
-        # scan entirely; boundaries only affect balance, never order
+        # scan entirely; boundaries only affect balance, never order.
+        # A partial dict is a caller bug, not a cue to rescan.
+        missing = [c for c in order_cols if c not in bounds]
+        if missing:
+            raise ValueError(f"bounds has no entry for order columns {missing}")
         all_bounds = [bounds[c] for c in order_cols]
     else:
         err = (

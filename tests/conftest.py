@@ -12,25 +12,25 @@ if str(REPO) not in sys.path:
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-_FAST_PROFILE_NOTICE = (
-    'FAST DEV PROFILE (-m "not slow" from pytest.ini): the driver-parity '
-    "suites — the full-registry oracle replica, streaming replay, and "
-    "bench floor — were DESELECTED, not run. The full suite is: "
-    'python -m pytest tests/ -q -m "slow or not slow"'
+_DEFAULT_PROFILE_NOTICE = (
+    'DEFAULT PROFILE (-m "not slow" from pytest.ini): the slow suites — '
+    "streaming replay, bench floor and long sweeps — were DESELECTED, "
+    "not run; the full-registry oracle replica did run. The full suite "
+    'is: python -m pytest tests/ -q -m "slow or not slow"'
 )
 
 
 def pytest_report_header(config):
     if config.option.markexpr == "not slow":
-        return _FAST_PROFILE_NOTICE
+        return _DEFAULT_PROFILE_NOTICE
 
 
 def pytest_terminal_summary(terminalreporter, exitstatus, config):
-    """A green fast run must not read as a green FULL run — repeat the
+    """A green default run must not read as a green FULL run — repeat the
     deselection notice where eyes land (after the pass/fail line)."""
     if config.option.markexpr == "not slow":
-        terminalreporter.section("fast profile", sep="=")
-        terminalreporter.write_line(_FAST_PROFILE_NOTICE)
+        terminalreporter.section("default profile", sep="=")
+        terminalreporter.write_line(_DEFAULT_PROFILE_NOTICE)
 
 
 @pytest.fixture(scope="session")

@@ -1,8 +1,13 @@
 """Input-contract pins for small helpers: column names that are not
-plain identifiers, partial precomputed inputs that must fail loudly,
-and the ``--stream-overlap`` summary's sequential total."""
+plain identifiers, partial precomputed inputs and out-of-range literals
+that must fail loudly, the Column template cache under threads, and the
+``--stream-overlap`` summary's sequential total."""
 
 from __future__ import annotations
+
+import sys
+import threading
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import types as T
@@ -24,6 +29,62 @@ def test_local_frame_nullability_wrap_keeps_dotted_names(spark):
     lf = local_frame(spark, rows, schema)
     assert lf.schema == spark.createDataFrame(rows, schema).schema
     assert sorted(map(tuple, lf.collect())) == rows
+
+
+@pytest.mark.parametrize(
+    "dtype,bits",
+    [
+        (T.ByteType(), 8),
+        (T.ShortType(), 16),
+        (T.IntegerType(), 32),
+        (T.LongType(), 64),
+    ],
+)
+def test_local_frame_rejects_out_of_range_ints(spark, dtype, bits):
+    """An int outside an integral field's range raises a ValueError
+    naming the field, whatever the session's ANSI setting; the range's
+    own ends are kept exactly."""
+    from udacity_dsnd_projects_spark.operators.localframe import local_frame
+
+    schema = T.StructType([T.StructField("n", dtype, True)])
+    lo, hi = -(1 << bits - 1), (1 << bits - 1) - 1
+    for bad in (lo - 1, hi + 1):
+        with pytest.raises(ValueError, match=r"field 'n': .* outside the range"):
+            local_frame(spark, [(0,), (bad,)], schema)
+    kept = local_frame(spark, [(lo,), (hi,)], schema).collect()
+    assert sorted(r.n for r in kept) == [lo, hi]
+
+
+def test_cached_expr_survives_concurrent_eviction(monkeypatch):
+    """Threads that hit, insert and evict past ``_CAP`` at once must
+    never see a key vanish between its lookup and ``move_to_end``."""
+    from udacity_dsnd_projects_spark.operators import exprcache
+
+    monkeypatch.setattr(exprcache, "_CACHE", type(exprcache._CACHE)())
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
+    errors: list[BaseException] = []
+
+    def hammer(seed):
+        try:
+            for i in range(20_000):
+                k = (seed * 7919 + i * 31) % (exprcache._CAP + 16)
+                assert exprcache.cached_expr(fake, (k,), lambda: k) == k
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=hammer, args=(s,)) for s in range(8)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert len(exprcache._CACHE) <= exprcache._CAP
 
 
 def test_exact_multi_rank_rejects_partial_bounds(spark):

@@ -1,5 +1,6 @@
 """Every registry query vs its DuckDB oracle — the local replica of the
-driver's t2 correctness gate."""
+driver's t2 correctness gate. It runs in the default profile, so every
+verify checks every query, not only the driver's 50-query window."""
 
 from __future__ import annotations
 
@@ -16,7 +17,6 @@ def _registry_items():
     return [(name, qs[name], oracles.get(name)) for name in sorted(qs)]
 
 
-@pytest.mark.slow
 @pytest.mark.parametrize(
     "name,fn,oracle", _registry_items(), ids=[n for n, _, _ in _registry_items()]
 )

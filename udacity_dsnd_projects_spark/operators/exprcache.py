@@ -18,6 +18,7 @@ restarts (the _BPE_LEARN_CACHE convention in functions/text.py)."""
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict
 from typing import Callable
 
@@ -25,6 +26,7 @@ from pyspark.sql import Column, SparkSession
 
 _CACHE: "OrderedDict[tuple, Column]" = OrderedDict()
 _CAP = 64
+_LOCK = threading.Lock()
 
 
 def cached_expr(
@@ -34,12 +36,16 @@ def cached_expr(
     ``key`` must capture everything the expression depends on (the
     artifact values baked into it, any constants)."""
     full_key = (spark.sparkContext.applicationId, *key)
-    hit = _CACHE.get(full_key)
-    if hit is not None:
-        _CACHE.move_to_end(full_key)
-        return hit
+    with _LOCK:
+        hit = _CACHE.get(full_key)
+        if hit is not None:
+            _CACHE.move_to_end(full_key)
+            return hit
+    # built outside the lock (hundreds of py4j calls); two threads that
+    # miss on one key both build, and the later insert wins
     col = build()
-    while len(_CACHE) >= _CAP:
-        _CACHE.popitem(last=False)
-    _CACHE[full_key] = col
+    with _LOCK:
+        while len(_CACHE) >= _CAP:
+            _CACHE.popitem(last=False)
+        _CACHE[full_key] = col
     return col

@@ -52,6 +52,10 @@ MAX_LITERAL_ROWS = 4096
 
 _SAFE_NAME = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
+#: bit width of each integral type: an int outside its range raises
+#: here instead of wrapping, nulling or failing by the session's ANSI mode
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
 
 def _sql_value(v, dt: T.DataType) -> str | None:
     """Render ``v`` as a SQL expression of exactly ``dt``, or None when
@@ -120,6 +124,15 @@ def local_frame(
                 f"local_frame row {i} has {len(vals)} values for "
                 f"{len(fields)} schema fields"
             )
+        for v, f in zip(vals, fields):
+            bits = _INT_BITS.get(type(f.dataType))
+            if bits and isinstance(v, int) and not (
+                -(1 << bits - 1) <= v < 1 << bits - 1
+            ):
+                raise ValueError(
+                    f"local_frame row {i} field {f.name!r}: {v} is outside "
+                    f"the range of {f.dataType.simpleString()}"
+                )
         checked.append(vals)
 
     # fast path: the whole relation as ONE parsed SQL expression
